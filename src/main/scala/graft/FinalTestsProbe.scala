@@ -49,7 +49,8 @@ object FinalTestsProbe {
     val edges = organic ++ sanctuary
 
     // driver-side decomposition for the U recipe AND the acceptance oracle
-    val comps = LocalTarjan.solve((0L until n).toArray, edges).toArray
+    val comps = LocalTarjan.solve((0L until n).toArray, edges.map(_._1).toArray,
+      edges.map(_._2).toArray).toArray
     val members = comps.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
     val small = members.filter { case (_, ms) => ms.length >= 2 && ms.length <= 1000 }
       .keys.toSeq.sorted

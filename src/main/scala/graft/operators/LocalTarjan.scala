@@ -1,6 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
+import graft.plans.LocalKernel
 
 /** Executor-side exact SCC solve for one small partition of the graph —
   * the "local phase" of the hybrid FW-BW design: the distributed supersteps
@@ -13,61 +13,87 @@ import scala.collection.mutable
   * Components", IPDPS'14) and is what makes thousands-of-tiny-components
   * graphs cost O(1) jobs instead of O(max component diameter).
   *
-  * Iterative (explicit stack) Tarjan — partitions can be long cycles/chains,
-  * recursion would blow the task stack. Returns canonical min-member ids.
+  * Iterative (explicit stack) Tarjan over a CSR adjacency of primitive
+  * arrays — partitions can be long cycles/chains, recursion would blow the
+  * task stack. Returns canonical min-member ids.
   */
-object LocalTarjan {
+object LocalTarjan extends LocalKernel {
 
-  /** SCCs of the subgraph given by `vertexIds` and `edges` (both endpoints
-    * must be in `vertexIds`). Returns (id, minMemberOfScc) pairs.
+  /** SCCs of the subgraph given by `ids` and the edges `src(i) → dst(i)`.
+    * Returns (id, minMemberOfScc) for every vertex and edge endpoint.
     */
-  def solve(vertexIds: Array[Long], edges: Array[(Long, Long)]): Iterator[(Long, Long)] = {
-    val adj = mutable.Map[Long, mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (s, d) => adj.getOrElseUpdate(s, mutable.ArrayBuffer[Long]()) += d }
+  def solve(ids: Array[Long], src: Array[Long], dst: Array[Long]): Iterator[(Long, Long)] = {
+    val m = LocalKernel.members(ids, src, dst)
+    val n = m.length
+    val e = src.length
+    // CSR adjacency over dense indices
+    val from = new Array[Int](e)
+    val start = new Array[Int](n + 1)
+    var i = 0
+    while (i < e) {
+      from(i) = java.util.Arrays.binarySearch(m, src(i))
+      start(from(i) + 1) += 1
+      i += 1
+    }
+    i = 0
+    while (i < n) { start(i + 1) += start(i); i += 1 }
+    val adj = new Array[Int](e)
+    val fill = java.util.Arrays.copyOf(start, n)
+    i = 0
+    while (i < e) {
+      adj(fill(from(i))) = java.util.Arrays.binarySearch(m, dst(i))
+      fill(from(i)) += 1
+      i += 1
+    }
 
-    val index = mutable.Map[Long, Int]()
-    val low = mutable.Map[Long, Int]()
-    val onStack = mutable.Set[Long]()
-    val stack = mutable.Stack[Long]()
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    var sp = 0
+    // DFS call stack: vertex and its next adjacency position
+    val callV = new Array[Int](n)
+    val callI = new Array[Int](n)
+    var cp = 0
+    val comp = new Array[Int](n)
     var counter = 0
-    val out = mutable.ArrayBuffer[(Long, Long)]()
-    val empty = mutable.ArrayBuffer.empty[Long]
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      callV(cp) = v; callI(cp) = start(v); cp += 1
+    }
 
-    for (root <- vertexIds if !index.contains(root)) {
-      val work = mutable.Stack[(Long, Int)]((root, 0))
-      while (work.nonEmpty) {
-        val (v, ci) = work.pop()
-        if (ci == 0) {
-          index(v) = counter; low(v) = counter; counter += 1
-          stack.push(v); onStack += v
-        }
-        val children = adj.getOrElse(v, empty)
-        var i = ci
-        var descended = false
-        while (i < children.length && !descended) {
-          val w = children(i)
-          if (!index.contains(w)) {
-            work.push((v, i + 1)); work.push((w, 0)); descended = true
-          } else {
-            if (onStack(w)) low(v) = math.min(low(v), index(w))
-            i += 1
-          }
-        }
-        if (!descended) {
+    var root = 0
+    while (root < n) {
+      if (index(root) < 0) visit(root)
+      while (cp > 0) {
+        val v = callV(cp - 1)
+        val k = callI(cp - 1)
+        if (k < start(v + 1)) {
+          callI(cp - 1) = k + 1
+          val w = adj(k)
+          if (index(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          cp -= 1
           if (low(v) == index(v)) {
-            val members = mutable.ArrayBuffer[Long]()
-            var w = -1L
-            while ({ w = stack.pop(); onStack -= w; members += w; w != v }) ()
-            val comp = members.min
-            members.foreach(m => out += ((m, comp)))
+            // pop the SCC; indices ascend with ids, so the min index is
+            // the canonical min member
+            var b = sp
+            var minIdx = v
+            while ({ b -= 1; minIdx = math.min(minIdx, stack(b)); stack(b) != v }) ()
+            var j = b
+            while (j < sp) { comp(stack(j)) = minIdx; onStack(stack(j)) = false; j += 1 }
+            sp = b
           }
-          if (work.nonEmpty) {
-            val (p, _) = work.top
+          if (cp > 0) {
+            val p = callV(cp - 1)
             low(p) = math.min(low(p), low(v))
           }
         }
       }
+      root += 1
     }
-    out.iterator
+    Iterator.range(0, n).map(v => (m(v), m(comp(v))))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.plans.{CheckpointArena, Superstep}
+import graft.plans.{CheckpointArena, LocalSolve, Superstep}
 
 /** Result handle for [[Scc.components]]:
   *   - [[release]]: unpersist every cached block backing [[components]]
@@ -406,9 +406,11 @@ object Scc {
   /** Full SCC decomposition. Returns (id, comp) for every vertex, with
     * comp = min member id (canonical), plus per-round metrics.
     *
-    * Hybrid execution (see [[LocalTarjan]]): every round, partitions whose
-    * internal edge count fits one task (`localSolveEdgeThreshold`) are
-    * finished by a per-group sequential Tarjan in a single shuffle, so only
+    * Hybrid execution (see [[LocalTarjan]], [[LocalSolve]]): every round,
+    * partitions whose internal edge count fits one task
+    * (`localSolveEdgeThreshold`, the budget WCC shares) are finished by a
+    * per-group sequential Tarjan in a single shuffle — a whole graph that
+    * fits is one Tarjan before any trim or round — so only
     * partitions too big for any single machine pay the superstep loop. At
     * 100 TB that means the giant component runs distributed FW-BW while the
     * million-small-component tail costs O(1) jobs total. Set the threshold
@@ -436,7 +438,7 @@ object Scc {
       vertices: DataFrame,
       maxOuter: Int = 100,
       maxTrimSweeps: Int = 20,
-      localSolveEdgeThreshold: Long = 250000,
+      localSolveEdgeThreshold: Long = LocalSolve.DefaultEdgeBudget,
       hubDegreeThreshold: Long = 2000000,
       hopsPerStep: Int = 1,
       snapshotDir: Option[String] = None,
@@ -452,7 +454,6 @@ object Scc {
     // scoped(): the previous setting is restored even on failure.
     graft.plans.Aqe.scoped(spark) { aqeOffForRun =>
     require(hopsPerStep >= 1)
-    import spark.implicits._
     val arena = new CheckpointArena
 
     val verts = vertices.select("id")
@@ -582,9 +583,6 @@ object Scc {
     // degree pass instead of a separate full cache-scan count job); -1 on
     // the durable-resume path, which never reads it
     var numEdges = -1L
-    // whether the whole-graph local-solve shortcut applies (also excludes
-    // the salting gate: that path never aggregates pivot sets)
-    var wholeGraphLocal = false
     // whether `live` is known hash(id)-partitioned (lets the BFS seed skip
     // an explicit repartition when the relabel pass is also skipped)
     var liveIdPart = false
@@ -636,18 +634,18 @@ object Scc {
         if (numEdges >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
         fullMaxDegs = Some((degStats._2, degStats._3))
         graft.Log.v(s"scc: edges materialized ($numEdges)")
-        wholeGraphLocal = numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0
-        if (wholeGraphLocal) {
-          // ---- whole-graph local-solve shortcut: the ENTIRE edge set fits
-          // one task, so round 0's per-group Tarjan will finish the job in a
-          // single shuffle regardless of partitioning — pre-trim and the WCC
-          // pre-partition would only add ~20 driver actions of pure latency.
-          // One pivot group (0) routes everything to the local solver.
-          preTrimDone = false
+        if (LocalSolve.fits(numEdges, localSolveEdgeThreshold)) {
+          // ---- whole-graph local solve: the ENTIRE edge set fits one task,
+          // so one Tarjan finishes the job in a single shuffle — pre-trim,
+          // the live-edge table and the round loop would only add driver
+          // actions of pure latency.
           arena.release(init._1)
-          val lc = arena.freshCounted(verts.select(col("id"), lit(0L).as("pivot")))
-          live = lc._1
-          liveCount = lc._2
+          val (solved, solvedCnt) = arena.freshCounted(LocalSolve.whole(
+            eBySrc, LocalTarjan, vertices = Some(verts)))
+          assignedParts += solved
+          assigned += solvedCnt
+          metrics += RoundMetrics(0, solvedCnt, 0L, 0L, 0, 0L, 0L)
+          liveCount = 0L // nothing left for the round loop
           graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
         } else {
         // src copy's blocks just materialized under the degree action —
@@ -738,9 +736,8 @@ object Scc {
     // only at the state join), so a trimmed-away hub still bounds fan-in.
     // One one-pass degree aggregation runs only on the rare path that has
     // no degree frame (durable resume). Computed only when a distributed
-    // BFS can happen — the whole-graph local-solve shortcut never
-    // aggregates pivot sets.
-    val useSalting = liveCount > 0 && !wholeGraphLocal && {
+    // BFS can happen (live vertices remain).
+    val useSalting = liveCount > 0 && {
       val (maxOutDeg, maxInDeg) = fullMaxDegs.getOrElse {
         val r = degreesOf(eBySrc)
           .agg(coalesce(max("oc"), lit(0L)), coalesce(max("ic"), lit(0L))).head()
@@ -795,7 +792,8 @@ object Scc {
       // srcP === dstP, so a weak component of le stays inside one partition,
       // and each label set is still a union of SCCs.
       if (round >= 1 && leCnt > localSolveEdgeThreshold) {
-        val wccRun = Wcc.run(spark, le.select("src", "dst"), live.select("id"))
+        val wccRun = Wcc.run(spark, le.select("src", "dst"), live.select("id"),
+          localSolveEdgeThreshold = localSolveEdgeThreshold)
         val (nl, _) = arena.freshCounted(
           live.select("id").join(wccRun.components, Seq("id"))
             .select(col("id"), col("comp").as("pivot"))
@@ -826,41 +824,23 @@ object Scc {
       // finished right here by a per-group Tarjan (one shuffle on pivot).
       var localSolved = 0L
       if (localSolveEdgeThreshold > 0 && !skipLe) {
-        val groupEdgeCounts = le.groupBy("pivot").agg(count(lit(1)).as("ec"))
-        val (smallPivots, _) = arena.freshCounted(
-          live.select("pivot").distinct()
-            .join(groupEdgeCounts, Seq("pivot"), "left")
-            .filter(coalesce(col("ec"), lit(0L)) <= localSolveEdgeThreshold)
-            .select("pivot"))
-
-        // Records per group: (pivot, a, b) where b = -1 marks a vertex row.
-        val vertRecs = live.join(smallPivots, Seq("pivot"), "left_semi")
-          .select(col("pivot"), col("id").as("a"), lit(-1L).as("b"))
-        val edgeRecs = le.join(smallPivots, Seq("pivot"), "left_semi")
-          .select(col("pivot"), col("src").as("a"), col("dst").as("b"))
-        val (solved, solvedCnt) = arena.freshCounted(
-          vertRecs.unionByName(edgeRecs)
-            .as[(Long, Long, Long)]
-            .groupByKey(_._1)
-            .flatMapGroups { (_, it) =>
-              val vs = mutable.ArrayBuffer[Long]()
-              val es = mutable.ArrayBuffer[(Long, Long)]()
-              it.foreach { case (_, a, b) => if (b == -1L) vs += a else es += ((a, b)) }
-              LocalTarjan.solve(vs.toArray, es.toArray)
-            }
-            .toDF("id", "comp"))
-        localSolved = solvedCnt
-        assigned += solvedCnt
+        val solved = LocalSolve.groups(arena,
+          live.select(col("pivot").as("key"), col("id")),
+          le.select(col("pivot").as("key"), col("src"), col("dst")),
+          localSolveEdgeThreshold, LocalTarjan)
+        val smallPivots = solved.keys.select(col("key").as("pivot"))
+        localSolved = solved.rows
+        assigned += solved.rows
         graft.Log.v(s"scc round $round: local-solved $localSolved rows")
         if (localSolved > 0) {
-          assignedParts += solved
+          assignedParts += solved.labels
           val nl = arena.freshCounted(live.join(smallPivots, Seq("pivot"), "left_anti"))
           arena.release(live)
           live = nl._1
           liveCount = nl._2
           liveIdPart = false // anti-join may have re-partitioned by pivot
           leLive = le.join(smallPivots, Seq("pivot"), "left_anti")
-        } else arena.release(solved)
+        } else arena.release(solved.labels)
       }
 
       var trimmedTotal = 0L

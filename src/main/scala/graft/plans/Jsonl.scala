@@ -25,23 +25,41 @@ object Jsonl {
     * clean manifest instead of a permanently-unparseable mid-file line)
     * and return the surviving lines. Every other parse failure is left for
     * the caller to fail loudly on. Single-writer manifests only.
+    *
+    * The repair writes a `<manifest>.repair-<uuid>` sibling, forces it to
+    * disk, then renames it over the manifest atomically — a process crash
+    * at any point leaves either the old or the repaired manifest, never a
+    * truncated one (the rename's own durability across power loss is the
+    * file system's). A crash before the rename leaves the temp file behind;
+    * the next call sweeps such stale siblings on entry.
     */
   def repairTornTail(
       p: java.nio.file.Path, parses: String => Boolean): Seq[String] = {
+    import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
     import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+    val prefix = p.getFileName.toString + ".repair-"
+    val stale = Files.list(p.toAbsolutePath.getParent)
+    try stale.iterator().asScala
+      .filter(_.getFileName.toString.startsWith(prefix))
+      .foreach(Files.deleteIfExists)
+    finally stale.close()
+    val lines = Files.readAllLines(p).asScala.toSeq
     if (lines.nonEmpty && !parses(lines.last) && lines.init.forall(parses)) {
       graft.Log.v(s"resume: truncating torn final manifest line in $p")
-      // write-to-tmp + atomic rename: a crash mid-repair must never lose the
-      // previously committed lines (an in-place truncate-then-write can)
-      val tmp = p.resolveSibling(
-        p.getFileName.toString + s".repair-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.write(tmp,
-        lines.init.mkString("", "\n", if (lines.init.isEmpty) "" else "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val tmp = p.resolveSibling(prefix + java.util.UUID.randomUUID())
+      try {
+        val buf = java.nio.ByteBuffer.wrap(
+          lines.init.mkString("", "\n", if (lines.init.isEmpty) "" else "\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val ch = java.nio.channels.FileChannel.open(tmp,
+          StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+        try {
+          while (buf.hasRemaining) ch.write(buf)
+          ch.force(true)
+        } finally ch.close()
+        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
       lines.init
     } else lines
   }

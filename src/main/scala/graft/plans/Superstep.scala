@@ -48,14 +48,20 @@ final class Superstep(
     * `step` must return the full next state; `changedOf` is evaluated on the
     * already-checkpointed state so its scan is cheap and never recomputes the
     * step. Returns the converged state and per-iteration metrics.
+    * `state0Rows` marks `state0` as already checkpointed (by this harness's
+    * arena) with that many rows, so the harness does not materialize it again.
     */
   def run(state0: DataFrame, maxIter: Int, startIter: Int = 0,
       changedCol: Option[String] = None, changedMask: Option[Int] = None,
       sigCols: Option[Seq[String]] = None,
-      sigChanged: (DataFrame, Long, Long) => Long = null)(
+      sigChanged: (DataFrame, Long, Long) => Long = null,
+      state0Rows: Option[Long] = None)(
       step: (DataFrame, Int) => DataFrame)(
       changedOf: DataFrame => Long): (DataFrame, Vector[StepMetrics]) = {
-    val (st0, state0Rows) = arena.freshCounted(state0)
+    val (st0, rows0) = state0Rows match {
+      case Some(n) => (state0, n)
+      case None => arena.freshCounted(state0)
+    }
     var state = st0
     val metrics = Vector.newBuilder[StepMetrics]
     // Size-aware AQE policy (see [[Aqe]]): on a BIG state every shuffle
@@ -65,7 +71,7 @@ final class Superstep(
     // tasks and wins big (blanket-off was measured 2.7× slower on the sf0.1
     // q_wcc while 1.2× faster on the 15.3M-edge bench graph — round 4).
     // The state0 row count rides the checkpoint materialization: free.
-    val aqeOff = state0Rows >= Superstep.aqeOffMinStateRows
+    val aqeOff = rows0 >= Superstep.aqeOffMinStateRows
     def loop(): Unit = {
       var iter = startIter
       var changed = 1L
@@ -119,8 +125,8 @@ final class Superstep(
       }
     }
     if (aqeOff) Aqe.off(spark)(loop())
-    else if (tinyLoop && state0Rows <= Superstep.tinyLoopMaxStateRows)
-      Superstep.withTinyShuffle(spark, state0Rows)(loop())
+    else if (tinyLoop && rows0 <= Superstep.tinyLoopMaxStateRows)
+      Superstep.withTinyShuffle(spark, rows0)(loop())
     else loop()
     (state, metrics.result())
   }

@@ -273,11 +273,23 @@ object TableCatalog {
     id
   }
 
-  def snapshot(table: String, id: Int): Snapshot = {
+  def snapshot(table: String, id: Int): Snapshot =
+    readSnapshot(table, id).getOrElse(throw new IllegalArgumentException(
+      s"table $table has no snapshot $id (expired or never committed)"))
+
+  /** [[snapshot]], or None when its manifest does not exist — never
+    * committed, or expired (possibly by a concurrent [[expireSnapshots]]
+    * after the caller listed it: one read, no exists-then-read window).
+    */
+  private def readSnapshot(table: String, id: Int): Option[Snapshot] = {
     val f = manifestFile(table, id)
-    require(Files.exists(f),
-      s"table $table has no snapshot $id (expired or never committed)")
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    val raw =
+      try Some(Files.readAllLines(f))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    raw.map(r => parseSnapshot(f, id, r.asScala.toSeq.filter(_.nonEmpty)))
+  }
+
+  private def parseSnapshot(f: Path, id: Int, lines: Seq[String]): Snapshot = {
     val (schemas, curSchema, entryLines) = lines.headOption match {
       case Some(headerRe(cur, blob)) =>
         val ss = schemaRe.findAllMatchIn(blob).map { m =>
@@ -345,6 +357,7 @@ object TableCatalog {
     val preId = currentSnapshotId(table)
     if (preId >= 0) snapshot(table, preId).currentSchema.foreach(
       requireSchemaMatch(files, _))
+    else files.columns.foreach(validateColName) // they will become schema 0
     // Data files first, under a commit-unique prefix: the expensive part
     // runs outside the commit race, and a failed/abandoned commit leaves
     // only unreferenced files (collected by [[removeOrphans]]), never a
@@ -457,6 +470,8 @@ object TableCatalog {
             else
               spark.read.parquet(legacyCarried.head.path).schema.fields.toSeq
                 .map(f => f.name -> f.dataType.catalogString) :+ ("lang" -> "string")
+          // the names go into the schema header like any evolved name
+          fields0.foreach { case (nm, _) => validateColName(nm) }
           (Seq(TableSchema(0, fields0.zipWithIndex.map {
             case ((nm, tp), i) => Field(i + 1, nm, tp)
           })), 0)
@@ -505,7 +520,8 @@ object TableCatalog {
   /** The schema header is line-oriented JSON parsed with delimiter-anchored
     * regexes; names containing the delimiters (or raw quotes/escapes/control
     * chars) would be jstr-escaped on write but split wrongly on reload,
-    * silently dropping later fields. Refuse them at evolution time. */
+    * silently dropping later fields. Refuse them wherever a name enters the
+    * header: evolution, and the commit that derives schema 0. */
   private def validateColName(name: String): Unit =
     require(name.nonEmpty &&
       !name.exists(c => c < ' ' || c == '"' || c == '\\' || c == ']' || c == '}'),
@@ -736,6 +752,15 @@ object TableCatalog {
         org.apache.spark.sql.types.StructField(
           f.name, org.apache.spark.sql.types.DataType.fromDDL(f.dtype)))))
 
+  /** Absolute paths of the data files the manifests `ids` reference. A
+    * concurrent [[expireSnapshots]] may delete a listed manifest before it
+    * is read; it then references nothing — its files were either re-carried
+    * by a newer snapshot or expired — so the pass skips it instead of failing.
+    */
+  private[graft] def referencedFiles(table: String, ids: Seq[Int]): Set[String] =
+    ids.flatMap(id => readSnapshot(table, id).toSeq.flatMap(_.entries.map(e =>
+      Paths.get(e.path).toAbsolutePath.normalize.toString))).toSet
+
   /** Delete data files referenced by NO manifest — the one leak the
     * write-then-commit order allows: a failed/abandoned committer's
     * `data/w-<uuid>/` files are invisible to every reader and were never
@@ -760,15 +785,7 @@ object TableCatalog {
       else using(Files.list(md))(_.iterator().asScala
         .flatMap(p => snapRe.unapplySeq(p.getFileName.toString).map(_.head.toInt))
         .toSeq)
-    val referenced = ids.flatMap { id =>
-      // a concurrent expireSnapshots may delete a manifest between the
-      // listing above and this read; its references were either re-carried
-      // by a newer snapshot or expired — skip it, don't fail the pass
-      if (!Files.exists(manifestFile(table, id))) Nil
-      else try snapshot(table, id).entries.map(e =>
-        Paths.get(e.path).toAbsolutePath.normalize.toString)
-      catch { case _: java.nio.file.NoSuchFileException => Nil }
-    }.toSet
+    val referenced = referencedFiles(table, ids)
     val cutoff = System.currentTimeMillis() - olderThanMillis
     val all = using(Files.walk(dataDir))(_.iterator().asScala
       .filter(p => Files.isRegularFile(p)).toSeq) // materialize before mutating

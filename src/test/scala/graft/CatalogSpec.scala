@@ -394,6 +394,43 @@ class CatalogSpec extends SparkTest {
     assert(TableCatalog.removeOrphans(table, olderThanMillis = -60000L) == 0)
   }
 
+  test("removeOrphans: a manifest expired between listing and read references nothing") {
+    val table = freshTable()
+    val spec = GraphSpec(numCycles = 6, maxCycleLen = 4, extraArcsPerVertex = 0.2, seed = 37L)
+    val gen = CodeTable.generate(spark, spec)
+    TableCatalog.commitAppend(spark, table, gen)
+    TableCatalog.commitOverwrite(spark, table, gen.withColumn("fileId", col("fileId") + 1000L))
+    // the orphan pass lists both manifests ...
+    val listed = Seq(0, 1)
+    val live = TableCatalog.snapshot(table, 1).entries
+      .map(e => java.nio.file.Paths.get(e.path).toAbsolutePath.normalize.toString).toSet
+    // ... then a concurrent expiry deletes snap-0 before it is read
+    TableCatalog.expireSnapshots(table, keepLast = 1)
+    intercept[IllegalArgumentException](TableCatalog.snapshot(table, 0))
+    assert(TableCatalog.referencedFiles(table, listed) == live)
+    TableCatalog.removeOrphans(table, olderThanMillis = -60000L)
+    assert(live.forall(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
+    assert(TableCatalog.scan(spark, table).count() == gen.count())
+  }
+
+  test("first commit refuses a column name the schema header cannot carry") {
+    val table = freshTable()
+    val base = CodeTable.generate(spark,
+      GraphSpec(numCycles = 6, maxCycleLen = 4, extraArcsPerVertex = 0.2, seed = 38L))
+    // schema 0 is derived from this commit's columns: 'a]}' would end the
+    // header's field match early and drop fields on reload
+    for (bad <- Seq("a]}", "b\"c"))
+      intercept[IllegalArgumentException] {
+        TableCatalog.commitAppend(spark, table, base.withColumnRenamed("repo", bad))
+      }
+    // refused before any data was written or a snapshot claimed
+    assert(TableCatalog.currentSnapshotId(table) == -1)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table, "data")))
+    TableCatalog.commitAppend(spark, table, base)
+    assert(TableCatalog.snapshot(table, 0).currentSchema
+      .exists(_.fields.map(_.name).toSet == base.columns.toSet))
+  }
+
   test("sha256 row invariant survives the catalog round-trip") {
     val table = freshTable()
     val files = CodeTable.generate(spark,

@@ -1,45 +1,130 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Degrees, PageRank, Triangles, Wcc}
+import org.scalacheck.{Gen, Prop}
+import graft.operators.{Degrees, LocalTarjan, LocalUnionFind, PageRank, Triangles, Wcc}
+import graft.plans.LocalSolve
 import graft.sources.{GraphGen, GraphSpec}
 
 class WccSpec extends SparkTest {
+  /** Threshold 0 → pure large-star/small-star contraction; the default →
+    * local union-find finish (every case here fits the budget). */
+  private val thresholds = Seq(0L, LocalSolve.DefaultEdgeBudget)
+
+  private def labels(run: graft.operators.WccRun): Map[Long, Long] =
+    run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("wcc matches union-find on fixtures") {
-    for (name <- Seq("sample_graph", "sample_graph5", "sample_graph8")) {
+    for (name <- Seq("sample_graph", "sample_graph5", "sample_graph8"); t <- thresholds) {
       val (edges, n, _) = fixture(name)
       val expected = Oracle.wcc(0L until n, edges)
-      val run1 = Wcc.run(spark, edgesDf(edges), vertsDf(0L until n))
-      val got = run1.components
-      assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected, name)
+      val run1 = Wcc.run(spark, edgesDf(edges), vertsDf(0L until n),
+        localSolveEdgeThreshold = t)
+      assert(labels(run1) == expected, s"$name threshold=$t")
     }
   }
 
   test("wcc on a long path converges in O(log) rounds, not O(diameter) supersteps") {
     val edges = (0L until 200L).map(i => (i, i + 1))
     val expected = Oracle.wcc(0L to 200L, edges)
-    val run2 = Wcc.run(spark, edgesDf(edges), vertsDf(0L to 200L))
-    val got = run2.components
-    val metrics = run2.metrics
-    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
-    assert(metrics.size < 30, s"took ${metrics.size} supersteps for diameter 200")
+    for (t <- thresholds) {
+      val run2 = Wcc.run(spark, edgesDf(edges), vertsDf(0L to 200L),
+        localSolveEdgeThreshold = t)
+      val metrics = run2.metrics
+      assert(labels(run2) == expected, s"threshold=$t")
+      assert(metrics.size < 30, s"took ${metrics.size} supersteps for diameter 200")
+      // a link set within the budget runs no star round: one local finish
+      if (t > 0) assert(metrics.size == 1, s"metrics=$metrics")
+    }
   }
 
   test("wcc on generated graph") {
     val spec = GraphSpec(numCycles = 30, maxCycleLen = 8, extraArcsPerVertex = 0.2, seed = 5L)
     val edges = GraphGen.edges(spark, spec).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val expected = Oracle.wcc(0L until spec.numVertices, edges)
-    val run3 = Wcc.run(spark, GraphGen.edges(spark, spec), GraphGen.vertices(spark, spec))
-    val got = run3.components
-    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+    for (t <- thresholds) {
+      val run3 = Wcc.run(spark, GraphGen.edges(spark, spec), GraphGen.vertices(spark, spec),
+        localSolveEdgeThreshold = t)
+      assert(labels(run3) == expected, s"threshold=$t")
+    }
   }
 
   test("wcc with roundsPerStep=2 converges to the same labels") {
     val (edges, n, _) = fixture("sample_graph8")
     val expected = Oracle.wcc(0L until n, edges)
-    val run4 = Wcc.run(spark, edgesDf(edges), vertsDf(0L until n), roundsPerStep = 2)
-    val got = run4.components
-    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+    for (t <- thresholds) {
+      val run4 = Wcc.run(spark, edgesDf(edges), vertsDf(0L until n), roundsPerStep = 2,
+        localSolveEdgeThreshold = t)
+      assert(labels(run4) == expected, s"threshold=$t")
+    }
+  }
+
+  test("wcc contracts until the link set fits, then finishes locally") {
+    // 800 edges over 100 vertices: contraction drops the redundant links
+    // (a contracted set keeps about one link per non-root vertex), so the
+    // set falls under a 150-link budget
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(800)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
+    val run5 = Wcc.run(spark, edgesDf(edges), vertsDf(0L until 100L),
+      localSolveEdgeThreshold = 150)
+    val metrics = run5.metrics
+    assert(labels(run5) == Oracle.wcc(0L until 100L, edges))
+    // star steps until one fits the budget, then the local finish — fewer
+    // star steps than contracting to the fixpoint
+    val starOnly = Wcc.run(spark, edgesDf(edges), vertsDf(0L until 100L),
+      localSolveEdgeThreshold = 0).metrics
+    assert(metrics.size >= 2 && metrics.size - 1 < starOnly.size,
+      s"metrics=$metrics star-only=$starOnly")
+  }
+
+  test("property: both wcc paths match union-find on random edge lists") {
+    // Random graphs over ids 0..n-1 (plus a few ids far above n): vertices
+    // with no edge, self-loops and repeated edges in both directions.
+    val graphs = for {
+      n <- Gen.choose(1, 40)
+      m <- Gen.choose(0, 60)
+      edges <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n - 1L)
+        b <- Gen.frequency(6 -> Gen.choose(0L, n - 1L), 1 -> Gen.const(a))
+      } yield (a, b))
+      dup <- Gen.someOf(edges)
+      shift <- Gen.oneOf(0L, 1000000007L)
+    } yield (n, (edges ++ dup.toSeq.map(_.swap)).map { case (a, b) => (a + shift, b + shift) },
+      shift)
+    val prop = Prop.forAll(graphs) { case (n, edges, shift) =>
+      val vertices = (0L until n).map(_ + shift)
+      val expected = Oracle.wcc(vertices, edges)
+      // a threshold between the two: contraction, then a local finish
+      (thresholds :+ math.max(1L, edges.size / 2L)).forall { t =>
+        labels(Wcc.run(spark, edgesDf(edges), vertsDf(vertices),
+          localSolveEdgeThreshold = t)) == expected
+      }
+    }
+    val result = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(12).withInitialSeed(20261017L),
+      prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
+  test("property: LocalUnionFind and LocalTarjan match their oracles") {
+    val graphs = for {
+      n <- Gen.choose(1, 60)
+      edges <- Gen.listOf(for {
+        a <- Gen.choose(-5L, n - 1L)
+        b <- Gen.choose(-5L, n - 1L)
+      } yield (a, b))
+    } yield (n, edges.filter { case (a, b) => a != b })
+    val prop = Prop.forAll(graphs) { case (n, edges) =>
+      val vertices = (-5L until n).toArray
+      val src = edges.map(_._1).toArray
+      val dst = edges.map(_._2).toArray
+      LocalUnionFind.solve(vertices, src, dst).toMap == Oracle.wcc(vertices.toSeq, edges) &&
+        LocalTarjan.solve(vertices, src, dst).toMap == Oracle.tarjan(vertices.toSeq, edges)
+    }
+    val result = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(20261017L),
+      prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }
 

@@ -807,4 +807,26 @@ class SuperstepResumeSpec extends SparkTest {
     val h4 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
     assertThrows[IllegalStateException](h4.resume())
   }
+
+  test("torn-tail repair sweeps stale .repair-* temp files") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_repair")
+    val manifest = dir.resolve("toy.manifest.jsonl")
+    Files.writeString(manifest, "good\ntorn")
+    // a crash between writing the temp file and the rename left these
+    val stale = Seq("a", "b").map(u => dir.resolve(s"toy.manifest.jsonl.repair-$u"))
+    stale.foreach(Files.writeString(_, "good\n"))
+    val other = dir.resolve("other.manifest.jsonl.repair-c")
+    Files.writeString(other, "x")
+    val lines = graft.plans.Jsonl.repairTornTail(manifest, _ == "good")
+    assert(lines == Seq("good"))
+    assert(Files.readString(manifest) == "good\n")
+    // stale siblings of this manifest are gone, the repair left none of its
+    // own, and another manifest's temp file is not touched
+    val left = Files.list(dir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("toy.manifest.jsonl", "other.manifest.jsonl.repair-c"))
+    finally left.close()
+  }
 }
