@@ -129,11 +129,11 @@ object PageRank {
     val steps = (maxIter + itersPerStep - 1) / itersPerStep
     val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena,
       tinyLoop = true)
-    val (converged, metrics) = harness.run(state0, steps, changedCol = Some("changed")) {
-      (state, step) =>
+    val (converged, metrics) = harness.run(state0, steps,
+        taps = Seq(count_if(col("changed")))) { (state, step) =>
       val itersThisStep = math.min(itersPerStep, maxIter - step * itersPerStep)
       (0 until itersThisStep).foldLeft(state)((s, _) => update(s))
-    } { _ => 0L }
+    } { _.taps(0) }
 
     edgesBySrc.unpersist(false)
     new PageRankRun(converged.select("id", "rank"), metrics, () => arena.closeExcept())

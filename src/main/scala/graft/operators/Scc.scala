@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.Checkpoint
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -120,9 +121,9 @@ object Scc {
       .agg(sum("d.oc").as("oc"), sum("d.ic").as("ic"))
 
   /** Initial flagged degree frame for [[trimFixpoint]]: verts ⟕ one-pass
-    * [[degreesOf]], `dead` = in- or out-degree 0, checkpointed with the
-    * row/dead counts riding the materialization action. Extra `verts`
-    * columns (e.g. `pivot`) ride along unchanged.
+    * [[degreesOf]], `dead` = in- or out-degree 0; callers checkpoint it
+    * with [[deadTap]] (plus any phase-stat taps) riding the materialization
+    * action. Extra `verts` columns (e.g. `pivot`) ride along unchanged.
     */
   private def trimDegreesPlan(edges: DataFrame, verts: DataFrame): DataFrame = {
     val carry = verts.columns.filter(_ != "id").toSeq
@@ -134,35 +135,19 @@ object Scc {
       .withColumn("dead", col("oc") <= 0 || col("ic") <= 0)
   }
 
-  private def buildTrimDegrees(
-      arena: CheckpointArena, edges: DataFrame, verts: DataFrame): (DataFrame, Long, Long) =
-    arena.freshFlagged(trimDegreesPlan(edges, verts), "dead")
-
-  /** [[buildTrimDegrees]] that also rides the whole-graph phase stats on the
-    * SAME materialization action (accumulators — zero extra jobs): Σoc =
-    * edge total, max(oc)/max(ic) = full-graph max degrees. The previous
-    * separate one-row agg job ran on EVERY components() call (VERDICT r4);
-    * all three values gate heuristics only (local-solve routing, AQE
-    * policy, the salting gate), which is exactly the accumulator retry
-    * contract.
-    */
-  private def buildTrimDegreesWithStats(
-      arena: CheckpointArena, edges: DataFrame, verts: DataFrame):
-      ((DataFrame, Long, Long), (Long, Long, Long)) = {
-    val (df, n, dead, sums, maxes) = arena.freshFlaggedWithLongStats(
-      trimDegreesPlan(edges, verts), "dead", Seq("oc", "ic"))
-    ((df, n, dead), (sums(0), maxes(0), maxes(1)))
-  }
+  /** Checkpoint tap: the `dead` rows of a trim degree frame. */
+  private val deadTap: Column = count_if(col("dead"))
 
   /** Degree-decrement trim-1 fixpoint (`trimming_kernel`/`trimming`,
     * main.cpp:54-63, cuda/scc_operations.cu:89-127) in incremental form:
-    * in/out-degrees come pre-aggregated in `init` (from
-    * [[buildTrimDegrees]] — ONE pass over ONE edge copy); each sweep
+    * in/out-degrees come pre-aggregated in `init` (a [[trimDegreesPlan]]
+    * checkpoint whose tap 0 is [[deadTap]] — ONE pass over ONE edge
+    * copy); each sweep
     * removes the dead vertices (in- or out-degree 0 ⇒ singleton SCC) and
     * only decrements the counters of their neighbors — O(removed·degree)
     * shuffle per sweep instead of a full edges⨝live re-join. ONE Spark
     * action per sweep (the counter update, whose dead-count rides the
-    * checkpoint accumulator; the removed set is a lazy filter).
+    * checkpoint as a tap; the removed set is a lazy filter).
     *
     * `edges` is scanned once per sweep; `edgesByDst` (same rows,
     * dst-partitioned) is BY-NAME and only forced by the rare huge sweep
@@ -208,14 +193,16 @@ object Scc {
       arena: CheckpointArena,
       edges: DataFrame,
       edgesByDst: => DataFrame,
-      init: (DataFrame, Long, Long),
+      init: Checkpoint,
       maxSweeps: Int,
       assignedParts: mutable.ArrayBuffer[DataFrame],
       partBacking: mutable.ArrayBuffer[DataFrame],
       compactedParts: mutable.ArrayBuffer[DataFrame],
       capFraction: Double,
       capMinRemaining: Long): (DataFrame, Long, Long, Int, Boolean, Long) = {
-    var (degs, remaining, deadCnt) = init
+    var degs = init.df
+    var remaining = init.rows
+    var deadCnt = init.taps(0)
     val carry = degs.columns.filterNot(Set("id", "oc", "ic", "dead")).toSeq
     def proj(oc: Column, ic: Column): Seq[Column] =
       (col("id") +: carry.map(col)) ++ Seq(oc.as("oc"), ic.as("ic"))
@@ -242,8 +229,8 @@ object Scc {
     var localPendingRows = 0L
     var localCompactedRows = 0L
     def compactLocal(): Unit = if (localParts.size >= compactEvery) {
-      val (compacted, cnt) = arena.freshCounted(
-        localParts.reduce(_.unionByName(_)).repartition(col("id")))
+      val c = arena.checkpoint(localParts.reduce(_.unionByName(_)).repartition(col("id")))
+      val (compacted, cnt) = (c.df, c.rows)
       require(cnt == localPendingRows,
         s"trim compaction rows $cnt != pending tally $localPendingRows — trim bug")
       localBacking.foreach(arena.release)
@@ -299,19 +286,19 @@ object Scc {
               .select(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))
             .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
         }
-      val next = arena.freshFlagged(
+      val next = arena.checkpoint(
         degs.filter(!col("dead")).drop("dead")
           .join(dec.hint("shuffle_hash"), Seq("id"), "left")
           .select(proj(col("oc") - coalesce(col("dOut"), lit(0L)),
             col("ic") - coalesce(col("dIn"), lit(0L))): _*)
           .withColumn("dead", col("oc") <= 0 || col("ic") <= 0),
-        "dead")
+        deadTap)
       // degs NOT released: it backs this sweep's removed fragment (until
       // compactLocal materializes the fragment and frees it)
       removedTotal += deadCnt
-      degs = next._1
-      remaining = next._2
-      deadCnt = next._3
+      degs = next.df
+      remaining = next.rows
+      deadCnt = next.taps(0)
       sweep += 1
       // safe point: `next` is materialized, so every frame in localBacking
       // is superseded except as a fragment backer — exactly what compaction
@@ -420,7 +407,7 @@ object Scc {
     * binding constraint; see BASELINE.md): the live partition-internal edge
     * table is materialized ONCE per round and shared by local-solve /
     * trim-1 / trim-2; trim sweeps decrement degree counters instead of
-    * re-joining edges; convergence counts ride checkpoint accumulators;
+    * re-joining edges; convergence counts ride checkpoint taps;
     * the relabel flows into the BFS harness's own state0 checkpoint; the
     * recolor checkpoint serves both the finished fragment and the done
     * count. `hopsPerStep` > 1 composes BFS hops into one action — OFF by
@@ -557,8 +544,8 @@ object Scc {
     def maybeCompactFragments(): Unit =
       if (assignedParts.size > fragmentCompactionThreshold) {
         val pendingRows = assigned - compactedRows
-        val (compacted, cnt) = arena.freshCounted(
-          assignedParts.reduce(_.unionByName(_)).repartition(col("id")))
+        val c = arena.checkpoint(assignedParts.reduce(_.unionByName(_)).repartition(col("id")))
+        val (compacted, cnt) = (c.df, c.rows)
         require(cnt == pendingRows,
           s"compacted fragment rows $cnt != pending tally $pendingRows — assignment bug")
         (assignedParts ++ partBacking).foreach(arena.release)
@@ -612,7 +599,7 @@ object Scc {
         assignedParts ++= parts
         // parquet-footer counts (metadata-only) seed the tally on resume
         assigned = parts.map(_.count()).sum
-        live = arena.fresh(liveDf.repartition(col("id")))
+        live = arena.checkpoint(liveDf.repartition(col("id"))).df
         liveCount = lc
         if (lc >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
         liveIdPart = true
@@ -626,22 +613,26 @@ object Scc {
         // one-pass explode degree aggregation ([[degreesOf]]) — the round-3
         // phase paid a separate count job plus the dst copy's full exchange
         // here, the two terms its (8,32) anti-scaling was made of.
-        val (init, degStats) = buildTrimDegreesWithStats(arena, eBySrc, verts)
-        // phase stats rode the materialization accumulators — no separate
-        // agg job (VERDICT r4 #6): Σoc = edge total; full-graph max degrees
-        // feed the salting gate.
-        numEdges = degStats._1
+        // The whole-graph phase stats ride the SAME materialization action
+        // as taps (zero extra jobs; the previous separate one-row agg job ran
+        // on EVERY components() call — VERDICT r4 #6): Σoc = edge total,
+        // max(oc)/max(ic) = full-graph max degrees. All three gate
+        // heuristics only (local-solve routing, AQE policy, the salting gate).
+        val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
+          deadTap, sum("oc"), max("oc"), max("ic"))
+        numEdges = init.taps(1)
         if (numEdges >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
-        fullMaxDegs = Some((degStats._2, degStats._3))
+        fullMaxDegs = Some((init.taps(2), init.taps(3)))
         graft.Log.v(s"scc: edges materialized ($numEdges)")
         if (LocalSolve.fits(numEdges, localSolveEdgeThreshold)) {
           // ---- whole-graph local solve: the ENTIRE edge set fits one task,
           // so one Tarjan finishes the job in a single shuffle — pre-trim,
           // the live-edge table and the round loop would only add driver
           // actions of pure latency.
-          arena.release(init._1)
-          val (solved, solvedCnt) = arena.freshCounted(LocalSolve.whole(
-            eBySrc, LocalTarjan, vertices = Some(verts)))
+          arena.release(init.df)
+          val c = arena.checkpoint(
+            LocalSolve.whole(eBySrc, LocalTarjan, vertices = Some(verts)))
+          val (solved, solvedCnt) = (c.df, c.rows)
           assignedParts += solved
           assigned += solvedCnt
           metrics += RoundMetrics(0, solvedCnt, 0L, 0L, 0, 0L, 0L)
@@ -709,17 +700,16 @@ object Scc {
             live = degs
             liveCount = preRemaining
           } else {
-            val lc = arena.freshCounted(
-              degs.select(col("id"), lit(pivot0).as("pivot")))
-            live = lc._1
-            liveCount = lc._2
+            val lc = arena.checkpoint(degs.select(col("id"), lit(pivot0).as("pivot")))
+            live = lc.df
+            liveCount = lc.rows
             arena.release(degs)
           }
           liveIdPart = true // degs is id-joined throughout trimFixpoint
           singlePivot = true
           singlePivotId = pivot0
         } else {
-          live = arena.fresh(verts.select(col("id"), col("id").as("pivot")).limit(0))
+          live = arena.checkpoint(verts.select(col("id"), col("id").as("pivot")).limit(0)).df
           liveCount = 0L
           arena.release(degs)
         }
@@ -770,12 +760,13 @@ object Scc {
           // (constructed only here: a fast-seeded live frame carries no
           // pivot column, and fast-seed implies skipLe)
           val lp = live.select(col("id"), col("pivot"))
-          arena.freshCounted(
+          val c = arena.checkpoint(
             eBySrc
               .join(lp.withColumnRenamed("id", "src").withColumnRenamed("pivot", "srcP"), Seq("src"))
               .join(lp.withColumnRenamed("id", "dst").withColumnRenamed("pivot", "dstP"), Seq("dst"))
               .filter(col("srcP") === col("dstP"))
               .select(col("srcP").as("pivot"), col("src"), col("dst")))
+          (c.df, c.rows)
         }
 
       // ---- deferred WCC partition refinement (rounds ≥ 1): a recolor can
@@ -794,10 +785,10 @@ object Scc {
       if (round >= 1 && leCnt > localSolveEdgeThreshold) {
         val wccRun = Wcc.run(spark, le.select("src", "dst"), live.select("id"),
           localSolveEdgeThreshold = localSolveEdgeThreshold)
-        val (nl, _) = arena.freshCounted(
+        val nl = arena.checkpoint(
           live.select("id").join(wccRun.components, Seq("id"))
             .select(col("id"), col("comp").as("pivot"))
-            .repartition(col("id")))
+            .repartition(col("id"))).df
         wccRun.release()
         arena.release(live)
         live = nl
@@ -805,10 +796,10 @@ object Scc {
         singlePivot = false
         // relabel le rather than rebuilding it from eBySrc: srcP === dstP
         // and labels refine partitions, so src's new pivot == dst's.
-        val (nle, _) = arena.freshCounted(
+        val nle = arena.checkpoint(
           le.select("src", "dst")
             .join(nl.select(col("id").as("src"), col("pivot")), Seq("src"))
-            .select(col("pivot"), col("src"), col("dst")))
+            .select(col("pivot"), col("src"), col("dst"))).df
         arena.release(le)
         le = nle
         graft.Log.v(s"scc round $round: WCC-refined remainder " +
@@ -834,10 +825,10 @@ object Scc {
         graft.Log.v(s"scc round $round: local-solved $localSolved rows")
         if (localSolved > 0) {
           assignedParts += solved.labels
-          val nl = arena.freshCounted(live.join(smallPivots, Seq("pivot"), "left_anti"))
+          val nl = arena.checkpoint(live.join(smallPivots, Seq("pivot"), "left_anti"))
           arena.release(live)
-          live = nl._1
-          liveCount = nl._2
+          live = nl.df
+          liveCount = nl.rows
           liveIdPart = false // anti-join may have re-partitioned by pivot
           leLive = le.join(smallPivots, Seq("pivot"), "left_anti")
         } else arena.release(solved.labels)
@@ -859,7 +850,7 @@ object Scc {
         // trickle the cap deliberately left to later rounds.
         if (round > 0 || !preTrimDone) {
           val (degsR, remaining, trimmed, _, _, trimCompacted) = trimFixpoint(
-            arena, leLive, leLive, buildTrimDegrees(arena, leLive, live),
+            arena, leLive, leLive, arena.checkpoint(trimDegreesPlan(leLive, live), deadTap),
             maxTrimSweeps, assignedParts, partBacking, compactedParts,
             trimCapFraction, trimCapMinRemaining)
           trimmedTotal = trimmed
@@ -882,11 +873,11 @@ object Scc {
         // sharing a vertex would force its in- (resp. out-) degree above 1.
         if (round > 0 && liveCount > 0) {
           val lpT = live.select("id")
-          val (le2, _) = arena.freshCounted(
+          val le2 = arena.checkpoint(
             leLive
               .join(lpT.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
               .join(lpT.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-              .select("src", "dst"))
+              .select("src", "dst")).df
           val mutual = le2.filter(col("src") < col("dst"))
             .join(le2.select(col("dst").as("src"), col("src").as("dst")),
               Seq("src", "dst"), "left_semi")
@@ -895,7 +886,7 @@ object Scc {
           val degs2 = od2.join(id2, Seq("id"), "full")
             .select(col("id"), coalesce(col("od"), lit(0L)).as("od"),
               coalesce(col("idg"), lit(0L)).as("idg"))
-          val (pairs, pairsCnt) = arena.freshCounted(
+          val pc = arena.checkpoint(
             mutual
               .join(degs2.select(col("id").as("src"), col("od").as("aOd"),
                 col("idg").as("aId")), Seq("src"))
@@ -904,6 +895,7 @@ object Scc {
               .filter((col("aId") === 1 && col("bId") === 1) ||
                 (col("aOd") === 1 && col("bOd") === 1))
               .select(col("src"), col("dst")))
+          val (pairs, pairsCnt) = (pc.df, pc.rows)
           pairTrimmed = 2 * pairsCnt
           assigned += pairTrimmed
           if (pairsCnt > 0) {
@@ -911,12 +903,12 @@ object Scc {
               .unionByName(pairs.select(col("dst").as("id"), col("src").as("comp")))
             partBacking += pairs
             assignedParts += pairMembers
-            val nl = arena.freshCounted(
+            val nl = arena.checkpoint(
               live.select("id", "pivot")
                 .join(pairMembers.select("id"), Seq("id"), "left_anti"))
             arena.release(live)
-            live = nl._1
-            liveCount = nl._2
+            live = nl.df
+            liveCount = nl.rows
           } else arena.release(pairs)
           arena.release(le2)
         }
@@ -948,8 +940,8 @@ object Scc {
         // full 8-byte UnsafeRow slot, so packing shrinks the per-step
         // checkpointed row from 7 slots to 3 (64B → 32B): state copy,
         // cache residency, and allocation rate — the measured per-step
-        // cost drivers — all drop ~2×. Convergence rides the same
-        // accumulator via a bit mask (changedMask below).
+        // cost drivers — all drop ~2×. Convergence rides the checkpoint as a
+        // masked count_if tap over the fwNew/bwNew bits (harness.run below).
         // Slim single-pivot state: with exactly one pivot (known driver-
         // side) and no trim this round, the pivot column is the same value
         // on every row — drop it from the iterated state ((id, st): 2
@@ -1089,19 +1081,20 @@ object Scc {
         // retire: a settled row is fully classified within its partition)
         val stepOnce: DataFrame => DataFrame =
           st => hop(st.filter(col("st") =!= 3))
-        val (reachedSt, bfsMetrics) = harness.run(
-          bfs0, Int.MaxValue, changedCol = Some("st"), changedMask = Some(12)) { (st, _) =>
+        val (reachedSt, bfsMetrics) = harness.run(bfs0, Int.MaxValue,
+            taps = Seq(count_if(col("st").bitwiseAND(lit(12)) =!= lit(0)))) { (st, _) =>
           (1 until hopsPerStep).foldLeft(stepOnce(st))((s, _) => hop(s))
-        } { _ => 0L }
+        } { _.taps(0) }
         bfsSteps = bfsMetrics.size
 
         if (slim) {
           // Final state: st ∈ {0,1,2} = non-members (never both-reached),
           // st == 3 = members settled in the last steps (not yet dropped);
           // everything dropped earlier is a member too.
-          val (nonMembers, nmCnt) = arena.freshCounted(
+          val nm = arena.checkpoint(
             reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
               .select(col("id"), col("st")))
+          val (nonMembers, nmCnt) = (nm.df, nm.rows)
           arena.release(reachedSt)
           val memberCnt = liveCount - nmCnt
           // canonical comp = min member id: one agg over the lazy
@@ -1119,13 +1112,13 @@ object Scc {
             (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
             (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
           val groupsNm = reachedNm.groupBy("fw", "bw").agg(min("id").as("newPivot"))
-          val (nl, nlCnt) = arena.freshCounted(
+          val nl = arena.checkpoint(
             reachedNm.join(groupsNm, Seq("fw", "bw"))
               .select(col("id"), col("newPivot").as("pivot")))
           // nonMembers backs the lazy members anti-join — retained
           partBacking += nonMembers
-          live = nl
-          liveCount = nlCnt
+          live = nl.df
+          liveCount = nl.rows
         } else {
           // ---- multi-pivot retirement + recolor (main.cpp:105-163): the
           // settled (= done) rows left the iterated state per step, so the
@@ -1133,17 +1126,19 @@ object Scc {
           // min member id per pivot group. Grouping by live's PRE-relabel
           // pivot is equivalent: the relabel/WCC maps are 1:1 on groups,
           // and the canonical min-member label is label-independent.
-          val (nonMembers, nmCnt) = arena.freshCounted(
+          val nm = arena.checkpoint(
             reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
               .select(col("id"), col("pivot"), col("st")))
+          val (nonMembers, nmCnt) = (nm.df, nm.rows)
           arena.release(reachedSt)
           val memberCnt = liveCount - nmCnt
           if (memberCnt > 0) {
             val members = live.select("id", "pivot")
               .join(nonMembers.select("id"), Seq("id"), "left_anti")
             val minPerPivot = members.groupBy("pivot").agg(min("id").as("comp"))
-            val (frag, fragCnt) = arena.freshCounted(
+            val fc = arena.checkpoint(
               members.join(minPerPivot, Seq("pivot")).select("id", "comp"))
+            val (frag, fragCnt) = (fc.df, fc.rows)
             require(fragCnt == memberCnt,
               s"done-fragment rows $fragCnt != settled tally $memberCnt")
             assignedParts += frag
@@ -1157,12 +1152,12 @@ object Scc {
             (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
             (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
           val groups = reachedNm.groupBy("pivot", "fw", "bw").agg(min("id").as("newPivot"))
-          val (nl, nlCnt) = arena.freshCounted(
+          val nl = arena.checkpoint(
             reachedNm.join(groups, Seq("pivot", "fw", "bw"))
               .select(col("id"), col("newPivot").as("pivot")))
           arena.release(nonMembers)
-          live = nl
-          liveCount = nlCnt
+          live = nl.df
+          liveCount = nl.rows
         }
         liveIdPart = false // recolor join leaves non-id partitioning
         singlePivot = false
@@ -1264,13 +1259,13 @@ object Scc {
       .withColumn("isKilled", lit(true))
 
     val outArena = new CheckpointArena
-    val (out, _) = outArena.freshCounted(withU
+    val out = outArena.checkpoint(withU
       .join(stats, Seq("comp"))
       .join(killed, Seq("comp"), "left")
       .select(
         col("id"), col("comp"),
         (col("sz") >= 2 && col("allU") && coalesce(col("isKilled"), lit(false)) === false)
-          .as("accepted")))
+          .as("accepted"))).df
     withU.unpersist(false)
     run.release() // out is eagerly materialized; the decomposition's blocks are spent
     new SccAcceptedRun(out, () => outArena.closeExcept())

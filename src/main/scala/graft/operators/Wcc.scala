@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.plans.{Aqe, CheckpointArena, LocalSolve, StepMetrics, Superstep}
 
@@ -48,8 +47,8 @@ final class WccRun(
   *
   * Canonical component id = min member id. On the star path convergence is
   * detected by a 64-bit content signature of the link set (xor of row
-  * hashes + count) going stable — one scalar agg per round instead of an
-  * except/count.
+  * hashes + count) going stable — a checkpoint tap, so the check costs no
+  * extra job per round.
   */
 object Wcc {
 
@@ -104,47 +103,47 @@ object Wcc {
     // largeStar's first distinct dedupes anyway; an input distinct here
     // would be one more full shuffle of the edge table. The row count
     // rides this checkpoint, which the star loop reuses as its state0.
-    val (links0, rows0) = arena.freshCounted(edges
+    val links0 = arena.checkpoint(edges
       .filter(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v")))
 
-    var linkRows = rows0
+    var linkRows = links0.rows
     val (links, starMetrics) =
-      if (fits(rows0)) (links0, Vector.empty[StepMetrics])
+      if (fits(links0.rows)) (links0.df, Vector.empty[StepMetrics])
       else {
         val harness = new Superstep(spark, "wcc", snapshotDir, arena = arena,
           tinyLoop = true)
         var prevSig: Option[(Long, Long)] = None
         var prevState: DataFrame = null
         // The (xor-hash, count) signature rides the checkpoint materialization
-        // (Superstep sigCols path) — round 6 removed the separate full-scan
-        // signature aggregate job this used to cost per round. The same
-        // count stops contraction once the link set fits the local finish.
-        harness.run(links0, maxIter, state0Rows = Some(rows0),
-          sigCols = Some(Seq("u", "v")),
-          sigChanged = { (next, rows, hash) =>
-            linkRows = rows
-            val sig = (hash, rows)
-            // The 64-bit signature alone leaves a ~2^-64/round early-termination
-            // window (an xor-hash collision). On FIRST stability, one exact
-            // confirmation closes it: counts already match (part of sig) and both
-            // sides are distinct link sets, so one-direction set difference being
-            // empty proves equality. Cost: one extra job per RUN, not per round.
-            val changed =
-              if (fits(rows)) 0L
-              else if (!prevSig.contains(sig)) 1L
-              else if (prevState != null &&
-                !next.select("u", "v").except(prevState.select("u", "v")).isEmpty) {
-                graft.Log.v("wcc: signature collision — exact check forced another round")
-                1L
-              } else 0L
-            graft.Log.v(s"wcc round: links=$rows changed=$changed")
-            prevSig = Some(sig)
-            changed
-          }) { (st, _) =>
+        // as a tap — round 6 removed the separate full-scan signature
+        // aggregate job this used to cost per round. The same count stops
+        // contraction once the link set fits the local finish.
+        harness.run(links0.df, maxIter, state0Rows = Some(links0.rows),
+          taps = Seq(bit_xor(xxhash64(col("u"), col("v"))))) { (st, _) =>
           prevState = st
           (0 until roundsPerStep).foldLeft(st)((s, _) => smallStar(largeStar(s)))
-        } { _ => 0L }
+        } { next =>
+          val rows = next.rows
+          linkRows = rows
+          val sig = (next.taps(0), rows)
+          // The 64-bit signature alone leaves a ~2^-64/round early-termination
+          // window (an xor-hash collision). On FIRST stability, one exact
+          // confirmation closes it: counts already match (part of sig) and both
+          // sides are distinct link sets, so one-direction set difference being
+          // empty proves equality. Cost: one extra job per RUN, not per round.
+          val changed =
+            if (fits(rows)) 0L
+            else if (!prevSig.contains(sig)) 1L
+            else if (prevState != null &&
+              !next.df.select("u", "v").except(prevState.select("u", "v")).isEmpty) {
+              graft.Log.v("wcc: signature collision — exact check forced another round")
+              1L
+            } else 0L
+          graft.Log.v(s"wcc round: links=$rows changed=$changed")
+          prevSig = Some(sig)
+          changed
+        }
       }
     require(fits(linkRows) || starMetrics.lastOption.exists(_.changed == 0),
       s"WCC did not converge within $maxIter rounds")
@@ -168,7 +167,7 @@ object Wcc {
 
     // AQE off for the local finish: its few tiny exchanges then run as one
     // job instead of one query-stage job each
-    val result = if (local) Aqe.off(spark)(arena.fresh(out)) else arena.fresh(out)
+    val result = (if (local) Aqe.off(spark)(arena.checkpoint(out)) else arena.checkpoint(out)).df
     arena.closeExcept(result)
     val metrics =
       if (!local) starMetrics

@@ -69,15 +69,15 @@ object LocalSolve {
       arena: CheckpointArena, vertices: DataFrame, edges: DataFrame,
       budget: Long, kernel: LocalKernel): Solved = {
     val edgeCounts = edges.groupBy("key").agg(count(lit(1)).as("ec"))
-    val keys = arena.fresh(
+    val keys = arena.checkpoint(
       vertices.select("key").distinct()
         .join(edgeCounts, Seq("key"), "left")
         .filter(coalesce(col("ec"), lit(0L)) <= budget)
-        .select("key"))
-    val (labels, rows) = arena.freshCounted(grouped(
+        .select("key")).df
+    val labels = arena.checkpoint(grouped(
       Some(vertices.join(keys, Seq("key"), "left_semi")),
       edges.join(keys, Seq("key"), "left_semi"), kernel))
-    Solved(labels, rows, keys)
+    Solved(labels.df, labels.rows, keys)
   }
 
   /** (id, comp) of a whole graph the caller knows fits one task: `edges`

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.Checkpoint
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Per-iteration bookkeeping emitted by the superstep harness — the Spark
@@ -15,22 +16,23 @@ final case class StepMetrics(iter: Int, changed: Long, wallMs: Long)
   *   - **Lineage control**: iterative DataFrame code doubles its logical plan
   *     every superstep unless the plan is cut; we `localCheckpoint(eager)`
   *     each iteration (the #1 failure mode of naive iterative Spark).
-  *   - **Convergence**: one driver action per superstep reads a single scalar
-  *     (the changed-row count), mirroring the reference's per-superstep
-  *     `d_stop` memcpy — never a `collect` of state.
+  *   - **Convergence**: one driver action per superstep — the checkpoint —
+  *     whose row count and aggregate taps (e.g. a changed-row count) feed a
+  *     single scalar, mirroring the reference's per-superstep `d_stop`
+  *     memcpy — never a `collect` of state.
   *   - **Resumability** (north_rule): when `snapshotDir` is set, every
   *     `snapshotEvery` iterations the state is written as parquet (one file
   *     per partition = per-partition lineage) together with a JSON manifest
   *     line (iteration, changed count, wall ms). `resume` restarts from the
   *     newest snapshot.
-  */
-/** @param tinyLoop opt-in to the tiny-state shuffle-partition override
+  *
+  * @param tinyLoop opt-in to the tiny-state shuffle-partition override
   *   (see [[Superstep.withTinyShuffle]]): right for loops whose per-step
-  *   plans touch only the state and its own aggregates (PageRank, WCC);
-  *   WRONG for loops joining large fixed-partitioning caches each step
-  *   (SCC's BFS hops against the 2×-partitioned edge tables re-exchanged
-  *   the edge side every hop under the override — measured 3× slower at
-  *   sf0.1).
+  *   plans touch only the state and its own aggregates (PageRank, WCC,
+  *   LabelProp); WRONG for loops joining large fixed-partitioning caches
+  *   each step (SCC's BFS hops against the 2×-partitioned edge tables
+  *   re-exchanged the edge side every hop under the override — measured 3×
+  *   slower at sf0.1).
   */
 final class Superstep(
     spark: SparkSession,
@@ -44,23 +46,25 @@ final class Superstep(
 
   private def jstr(s: String): String = Jsonl.jstr(s)
 
-  /** Run `step` from `state0` until `changedOf(next)` returns 0 or `maxIter`.
-    * `step` must return the full next state; `changedOf` is evaluated on the
-    * already-checkpointed state so its scan is cheap and never recomputes the
-    * step. Returns the converged state and per-iteration metrics.
+  /** Run `step` from `state0` until `changed` returns 0 or `maxIter`.
+    * `step` must return the full next state; each step's state is
+    * checkpointed with `taps` riding the materialization
+    * ([[CheckpointArena.checkpoint]]) and `changed` reads the result — its
+    * taps, row count, or (at the cost of a job) the checkpointed frame,
+    * which is cheap to scan and never recomputes the step. Returns the
+    * converged state and per-iteration metrics.
     * `state0Rows` marks `state0` as already checkpointed (by this harness's
     * arena) with that many rows, so the harness does not materialize it again.
     */
   def run(state0: DataFrame, maxIter: Int, startIter: Int = 0,
-      changedCol: Option[String] = None, changedMask: Option[Int] = None,
-      sigCols: Option[Seq[String]] = None,
-      sigChanged: (DataFrame, Long, Long) => Long = null,
-      state0Rows: Option[Long] = None)(
+      taps: Seq[Column] = Nil, state0Rows: Option[Long] = None)(
       step: (DataFrame, Int) => DataFrame)(
-      changedOf: DataFrame => Long): (DataFrame, Vector[StepMetrics]) = {
+      changed: Checkpoint => Long): (DataFrame, Vector[StepMetrics]) = {
     val (st0, rows0) = state0Rows match {
       case Some(n) => (state0, n)
-      case None => arena.freshCounted(state0)
+      case None =>
+        val c = arena.checkpoint(state0)
+        (c.df, c.rows)
     }
     var state = st0
     val metrics = Vector.newBuilder[StepMetrics]
@@ -74,49 +78,25 @@ final class Superstep(
     val aqeOff = rows0 >= Superstep.aqeOffMinStateRows
     def loop(): Unit = {
       var iter = startIter
-      var changed = 1L
-      while (changed > 0 && iter < maxIter) {
+      var changedRows = 1L
+      while (changedRows > 0 && iter < maxIter) {
       val t0 = System.nanoTime()
-      // When the step exposes a changed-flag column (boolean, or bit-packed
-      // int + changedMask), the convergence count rides the checkpoint
-      // materialization (accumulator) — one driver action per superstep
-      // instead of two.
-      val next = changedCol match {
-        case Some(c) =>
-          val (n, _, flagged) = changedMask match {
-            case Some(m) => arena.freshFlaggedMasked(step(state, iter), c, m)
-            case None => arena.freshFlagged(step(state, iter), c)
-          }
-          changed = flagged
-          n
-        case None => sigCols match {
-          case Some(cols) =>
-            // content-signature convergence (e.g. WCC's link set): the xor
-            // signature rides the checkpoint materialization, so detecting
-            // "state unchanged" costs no extra job per superstep
-            val (n, rows, sig) = arena.freshHashSig(step(state, iter), cols)
-            changed = sigChanged(n, rows, sig)
-            n
-          case None =>
-            val n = arena.fresh(step(state, iter))
-            changed = changedOf(n)
-            n
-        }
-      }
+      val next = arena.checkpoint(step(state, iter), taps: _*)
+      changedRows = changed(next)
       arena.release(state)
-      state = next
+      state = next.df
       val wallMs = (System.nanoTime() - t0) / 1000000
-      metrics += StepMetrics(iter, changed, wallMs)
-      graft.Log.v(s"superstep $name iter=$iter changed=$changed wallMs=$wallMs")
+      metrics += StepMetrics(iter, changedRows, wallMs)
+      graft.Log.v(s"superstep $name iter=$iter changed=$changedRows wallMs=$wallMs")
       snapshotDir.foreach { dir =>
-        val snap = iter % snapshotEvery == 0 || changed == 0
+        val snap = iter % snapshotEvery == 0 || changedRows == 0
         val snapPath = if (snap) {
           val p = s"$dir/$name.state_$iter"
           state.write.mode("overwrite").parquet(p)
           jstr(p)
         } else "null"
         val line =
-          s"""{"name":${jstr(name)},"iter":$iter,"changed":$changed,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
+          s"""{"name":${jstr(name)},"iter":$iter,"changed":$changedRows,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
         Files.writeString(
           manifestPath.get, line,
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -175,8 +155,7 @@ object Superstep {
     * work-per-step; 1M rows ≈ the point where 32 shuffle partitions stop
     * being latency-bound on this box (BASELINE.md round-4 A/Bs both ways).
     */
-  val aqeOffMinStateRows: Long =
-    sys.env.get("GRAFT_AQE_MIN_ROWS").map(_.toLong).getOrElse(1000000L)
+  val aqeOffMinStateRows: Long = 1000000L
 
   /** TINY-loop cutover: below this state size the per-superstep cost is
     * pure fixed overhead, and AQE's answer (coalesce every post-shuffle
@@ -188,8 +167,7 @@ object Superstep {
     * (tiny .. aqeOffMin) AQE's runtime choices win (measured round 4) and
     * stay in charge.
     */
-  val tinyLoopMaxStateRows: Long =
-    sys.env.get("GRAFT_TINY_LOOP_MAX_ROWS").map(_.toLong).getOrElse(100000L)
+  val tinyLoopMaxStateRows: Long = 100000L
 
   /** Run `f` with AQE off and `spark.sql.shuffle.partitions` sized to the
     * state (clamped to [2, current]); restores both settings after. */

@@ -2,8 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, UnsafeRow, With}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.execution.{AggregatingAccumulator, LogicalRDD}
 import org.apache.spark.unsafe.Platform
 
 /** Spark-internal access shim (hence the package) for one operation the
@@ -41,21 +43,9 @@ import org.apache.spark.unsafe.Platform
   * O(1) objects per batch — no serializer, no compression, just memcpy in
   * and pointer-bumping out. (The earlier MEMORY_AND_DISK_SER A/B paid
   * JavaSerializer CPU per row and measured 25% slower; this path has no
-  * per-row serialization cost.) Escape hatch: GRAFT_CKPT_PACK=0 restores
-  * the per-row copy cache.
+  * per-row serialization cost.)
   */
 object GraftShims {
-
-  /** Storage level for superstep checkpoint blocks (see the object doc;
-    * GRAFT_CKPT_SER=1 additionally stores the legacy row cache serialized —
-    * kept as a diagnostic for memory-constrained deployments).
-    */
-  private val ckptLevel =
-    if (sys.env.get("GRAFT_CKPT_SER").contains("1"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  private val packEnabled = !sys.env.get("GRAFT_CKPT_PACK").contains("0")
 
   /** Wrap a raw Catalyst Expression as a user-facing Column (Spark 4 made
     * Column node-based; the classic converter lives in a private[sql]
@@ -68,54 +58,55 @@ object GraftShims {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** The shared checkpoint core: materialize `df` once (cache + truncate
-    * lineage), calling `observe` exactly once per row DURING the
-    * materialization pass (ResultStage accumulator semantics — see the
-    * exactness note below), and wrap the cached rows in a fresh LogicalRDD
-    * carrying the physical plan's output partitioning/ordering but default
-    * stats. Returns (frame, persisted-rdd-handle, rowCount).
-    *
-    * EXACTNESS of observe-fed accumulators: the observe call sits in the
-    * final map of the one count() below, i.e. inside that job's ResultStage
-    * tasks. Spark's scheduler applies a ResultTask's accumulator updates
-    * only on the FIRST successful completion of each partition (retries of
-    * failed attempts are discarded — countFailedValues=false — and a
-    * speculative duplicate's updates are ignored because the partition is
-    * already finished), so observe-fed counts are exactly-once per
-    * partition even under task retry, stage retry, and speculation — unlike
-    * an accumulator in a ShuffleMapStage, where re-executed map tasks DO
-    * double-count. The other recompute path (a later job re-running this
-    * map after cache eviction) is closed by the localCheckpoint: lineage is
-    * truncated, so Spark reloads blocks or fails — never re-executes.
-    * Callers may therefore use ridden counts as exact tallies (Scc's
-    * fragment-exactness requires do), not just convergence signals.
+  /** Result of [[checkpoint]]: the materialized frame, its exact row count,
+    * one value per tap (in tap order; a null aggregate — e.g. `max` of an
+    * empty frame — reads 0), and the cached blocks backing `df`, to
+    * unpersist once the frame is superseded.
     */
-  private def ckptImpl(
-      df: DataFrame, observe: InternalRow => Unit): (DataFrame, RDD[_], Long) = {
+  final case class Checkpoint(df: DataFrame, rows: Long, taps: Vector[Long], blocks: RDD[_])
+
+  /** Eagerly materialize `df` into cached, lineage-truncated packed batches
+    * and wrap them in a fresh DataFrame with the same schema and output
+    * partitioning/ordering but default (not inherited) stats. ONE Spark job.
+    *
+    * `taps` are aggregate Columns over `df`'s columns — `count_if(flag)`,
+    * `sum("oc")`, `max("ic")`, `bit_xor(xxhash64(u, v))` — each cast to
+    * Long and evaluated per row DURING the materialization pass by Spark's
+    * own [[AggregatingAccumulator]] (the mechanism behind `Dataset.observe`),
+    * so an iterative algorithm's convergence count, phase stats or content
+    * signature costs zero extra jobs.
+    *
+    * EXACTNESS of the taps: the accumulator is updated only in the mapping
+    * that packs each partition, i.e. inside the one job's ResultStage tasks.
+    * Spark's scheduler applies a ResultTask's accumulator updates only on
+    * the FIRST successful completion of each partition (retries of failed
+    * attempts are discarded — countFailedValues=false — and a speculative
+    * duplicate's updates are ignored because the partition is already
+    * finished), so tap values are exactly-once per partition even under
+    * task retry, stage retry, and speculation — unlike an accumulator in a
+    * ShuffleMapStage, where re-executed map tasks DO double-count. The
+    * other recompute path (a later job re-running this map after cache
+    * eviction) is closed by the localCheckpoint: lineage is truncated, so
+    * Spark reloads blocks or fails — never re-executes. The row count is
+    * the job's own result. Callers may therefore use taps as exact tallies
+    * (Scc's fragment-exactness requires do), not just convergence signals.
+    */
+  def checkpoint(df: DataFrame, taps: Column*): Checkpoint = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = df.queryExecution
-    val (handle: RDD[_], rows: RDD[InternalRow], n: Long) =
-      if (packEnabled) {
-        val rowCount = session.sparkContext.longAccumulator("graft.ckpt.rows")
-        val nf = qe.analyzed.output.size
-        val packed = qe.toRdd.mapPartitions { it =>
-          PackedRowBatch.pack(it, nf, r => { observe(r); rowCount.add(1L) })
-        }
-        packed.persist(ckptLevel)
-        packed.localCheckpoint()
-        packed.count()
-        val rowsRdd = packed.mapPartitions(_.flatMap(_.rowIterator),
-          preservesPartitioning = true)
-        (packed, rowsRdd, rowCount.value.longValue)
-      } else {
-        // legacy per-row copy cache (GRAFT_CKPT_PACK=0): toRdd rows are
-        // reused per-partition buffers; copy before caching.
-        val rdd = qe.toRdd.map { r => observe(r); r.copy() }
-        rdd.persist(ckptLevel)
-        rdd.localCheckpoint()
-        val n = rdd.count()
-        (rdd, rdd, n)
-      }
+    val acc = if (taps.isEmpty) None else Some(tapAccumulator(df, taps))
+    acc.foreach(session.sparkContext.register(_))
+    val nf = qe.analyzed.output.size
+    val packed = qe.toRdd.mapPartitions { it =>
+      PackedRowBatch.pack(acc.fold(it)(a => it.map { r => a.add(r); r }), nf)
+    }
+    packed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    packed.localCheckpoint()
+    val rows = packed.map(_.lens.length.toLong).fold(0L)(_ + _)
+    val values = acc.fold(Vector.empty[Long]) { a =>
+      val r = a.value
+      taps.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i)).toVector
+    }
     // AdaptiveSparkPlanExec reports UnknownPartitioning at the top even
     // after finalization — unwrap to the final physical plan or the
     // partitioning is silently lost and every downstream same-key join
@@ -125,170 +116,35 @@ object GraftShims {
         a.finalPhysicalPlan
       case p => p
     }
-    val logical = LogicalRDD(
-      physical.output, rows, physical.outputPartitioning, physical.outputOrdering)(session)
-    (classic.Dataset.ofRows(session, logical), handle, n)
+    val logical = LogicalRDD(physical.output,
+      packed.mapPartitions(_.flatMap(_.rowIterator), preservesPartitioning = true),
+      physical.outputPartitioning, physical.outputOrdering)(session)
+    Checkpoint(classic.Dataset.ofRows(session, logical), rows, values, packed)
   }
 
-  /** Eagerly materialize `df` into a cached, lineage-truncated RDD and wrap
-    * it in a fresh DataFrame with the same schema and output partitioning
-    * but default (not inherited) stats. Returns the DataFrame, the backing
-    * RDD handle so callers can `unpersist` once superseded, and the exact
-    * materialized row count.
+  /** An accumulator evaluating `taps` (as Longs) over `df`'s rows. The taps
+    * are analyzed as the aggregate list of a global aggregate over a leaf
+    * carrying `df`'s output attributes — binding them to `df`'s rows
+    * without re-analyzing `df`'s own (possibly deep) plan. Runtime-
+    * replaceable aggregates (e.g. `count_if`) are swapped for the
+    * declarative ones the accumulator evaluates, and the common-
+    * subexpression `With` nodes those replacements introduce are inlined
+    * (the optimizer would hoist them into a projection below the
+    * aggregate, which a per-row accumulator does not have).
     */
-  def checkpointFresh(df: DataFrame): (DataFrame, RDD[_], Long) =
-    ckptImpl(df, _ => ())
-
-  /** [[checkpointFresh]] that additionally counts rows whose boolean column
-    * `flagCol` is true, DURING the materialization pass (via accumulator) —
-    * an iterative algorithm's convergence check then costs zero extra jobs
-    * instead of one count-job per superstep. Returns
-    * (frame, rdd, totalRows, flaggedRows).
-    */
-  def checkpointFreshFlagged(
-      df: DataFrame, flagCol: String): (DataFrame, RDD[_], Long, Long) = {
-    val idx = df.schema.fieldIndex(flagCol)
-    flaggedImpl(df, flagCol, r => !r.isNullAt(idx) && r.getBoolean(idx))
-  }
-
-  /** [[checkpointFreshFlagged]] over a bit-packed IntegerType status column:
-    * a row counts as flagged when `(value & mask) != 0`. Lets an iterative
-    * state pack several boolean flags into one 8-byte UnsafeRow slot and
-    * still ride the convergence count on the materialization pass.
-    */
-  def checkpointFreshFlaggedMasked(
-      df: DataFrame, flagCol: String, mask: Int): (DataFrame, RDD[_], Long, Long) = {
-    val idx = df.schema.fieldIndex(flagCol)
-    flaggedImpl(df, flagCol, r => !r.isNullAt(idx) && (r.getInt(idx) & mask) != 0)
-  }
-
-  /** Max-of-longs accumulator (Spark ships none): retry-safe by idempotence
-    * of max — unlike the sum accumulators, a replayed task cannot change
-    * the result.
-    */
-  private final class MaxAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
-    private var _max = Long.MinValue
-    override def isZero: Boolean = _max == Long.MinValue
-    override def copy(): MaxAccumulator = {
-      val a = new MaxAccumulator; a._max = _max; a
-    }
-    override def reset(): Unit = _max = Long.MinValue
-    override def add(v: java.lang.Long): Unit = _max = math.max(_max, v)
-    override def merge(
-        other: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long]): Unit =
-      _max = math.max(_max, other.value)
-    override def value: java.lang.Long = _max
-  }
-
-  /** [[checkpointFreshFlagged]] that ADDITIONALLY rides per-column sum and
-    * max over the given LongType columns on the same materialization pass —
-    * one driver action yields the frame, its row/flagged counts, and the
-    * aggregate stats an algorithm needs to pick its strategy (e.g. SCC's
-    * edge total and full-graph max degrees, previously a separate agg job
-    * on every call). Null column values count as 0 toward the sum and are
-    * skipped for the max. Same exactness argument as the flag accumulator
-    * (see [[ckptImpl]]), so counts/sums are exact too; maxes are
-    * additionally idempotent by construction. Callers here still use the
-    * stats only to pick strategies (thresholds, logging) — results never
-    * depend on them.
-    * Returns (frame, rdd, totalRows, flaggedRows, sums, maxes).
-    */
-  def checkpointFreshFlaggedWithLongStats(
-      df: DataFrame, flagCol: String, statCols: Seq[String]):
-      (DataFrame, RDD[_], Long, Long, Array[Long], Array[Long]) = {
+  private def tapAccumulator(df: DataFrame, taps: Seq[Column]): AggregatingAccumulator = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val flagIdx = df.schema.fieldIndex(flagCol)
-    val statIdx = statCols.map(df.schema.fieldIndex).toArray
-    statIdx.foreach { i =>
-      require(df.schema(i).dataType == org.apache.spark.sql.types.LongType,
-        s"stat column ${df.schema(i).name} must be LongType")
-    }
-    val flagAcc = session.sparkContext.longAccumulator(s"graft.flagged.$flagCol")
-    val sumAccs = statCols.map(c =>
-      session.sparkContext.longAccumulator(s"graft.sum.$c")).toArray
-    val maxAccs = statCols.map { c =>
-      val a = new MaxAccumulator
-      session.sparkContext.register(a, s"graft.max.$c")
-      a
-    }.toArray
-    val (out, rdd, n) = ckptImpl(df, { r =>
-      if (!r.isNullAt(flagIdx) && r.getBoolean(flagIdx)) flagAcc.add(1L)
-      var i = 0
-      while (i < statIdx.length) {
-        if (!r.isNullAt(statIdx(i))) {
-          val v = r.getLong(statIdx(i))
-          sumAccs(i).add(v)
-          maxAccs(i).add(v)
-        }
-        i += 1
-      }
-    })
-    (out, rdd, n, flagAcc.value,
-      sumAccs.map(_.value.longValue),
-      maxAccs.map(a => math.max(0L, a.value.longValue)))
-  }
-
-  /** Xor-of-longs accumulator: order-free content signature. Exactly-once
-    * under retry/speculation by the same ResultStage argument as the sum
-    * accumulators (see [[ckptImpl]]); callers additionally treat the
-    * value only as a CONVERGENCE SIGNAL confirmed by an exact set compare
-    * on first stability, so results never depend on it.
-    */
-  private final class XorAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
-    private var _x = 0L
-    private var _any = false
-    override def isZero: Boolean = !_any
-    override def copy(): XorAccumulator = {
-      val a = new XorAccumulator; a._x = _x; a._any = _any; a
-    }
-    override def reset(): Unit = { _x = 0L; _any = false }
-    override def add(v: java.lang.Long): Unit = { _x ^= v; _any = true }
-    override def merge(
-        other: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long]): Unit = {
-      _x ^= other.value; _any = true
-    }
-    override def value: java.lang.Long = _x
-  }
-
-  /** [[checkpointFresh]] that ADDITIONALLY rides a 64-bit content signature
-    * of the given LongType columns on the materialization pass: xor over
-    * rows of the seed-42 XXH64 fold of the column values (the same fold as
-    * `xxhash64(cols…)`). An iterative algorithm whose convergence test is
-    * "did the state's content change" (WCC's link set) then needs ZERO
-    * extra jobs per superstep — previously a separate full-scan aggregate
-    * job per round. Returns (frame, rdd, rows, signature).
-    */
-  def checkpointFreshHashSig(
-      df: DataFrame, cols: Seq[String]): (DataFrame, RDD[_], Long, Long) = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val idx = cols.map(df.schema.fieldIndex).toArray
-    idx.foreach { i =>
-      require(df.schema(i).dataType == org.apache.spark.sql.types.LongType,
-        s"signature column ${df.schema(i).name} must be LongType")
-    }
-    val acc = new XorAccumulator
-    session.sparkContext.register(acc, s"graft.sig.${cols.mkString(",")}")
-    val (out, rdd, n) = ckptImpl(df, { r =>
-      var h = 42L
-      var i = 0
-      while (i < idx.length) {
-        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(r.getLong(idx(i)), h)
-        i += 1
-      }
-      acc.add(h)
-    })
-    (out, rdd, n, acc.value.longValue)
-  }
-
-  private def flaggedImpl(
-      df: DataFrame, flagCol: String,
-      flagged: InternalRow => Boolean): (DataFrame, RDD[_], Long, Long) = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val acc = session.sparkContext.longAccumulator(s"graft.flagged.$flagCol")
-    val (out, rdd, n) = ckptImpl(df, r => if (flagged(r)) acc.add(1L))
-    (out, rdd, n, acc.value)
+    val output = df.queryExecution.analyzed.output
+    val longs = taps.map(_.cast(org.apache.spark.sql.types.LongType))
+    val analyzed = classic.Dataset.ofRows(session, LocalRelation(output))
+      .agg(longs.head, longs.tail: _*).queryExecution.analyzed
+    val exprs = ReplaceExpressions(analyzed).asInstanceOf[Aggregate].aggregateExpressions
+      .map(_.transformUp {
+        case With(body, defs) =>
+          val byId = defs.map(d => d.id -> d.child).toMap
+          body.transformUp { case r: CommonExpressionRef => byId(r.id) }
+      })
+    AggregatingAccumulator(exprs, output)
   }
 
   /** Drain the listener bus so a task-metrics snapshot taken right after a
@@ -343,12 +199,8 @@ private[sql] object PackedRowBatch {
     */
   val targetBytes: Int = 32 << 20
 
-  /** Pack a partition's rows into batches, calling `observe` exactly once
-    * per row as it streams by.
-    */
-  def pack(
-      it: Iterator[InternalRow], numFields: Int,
-      observe: InternalRow => Unit): Iterator[PackedRowBatch] =
+  /** Pack a partition's rows into batches. */
+  def pack(it: Iterator[InternalRow], numFields: Int): Iterator[PackedRowBatch] =
     new scala.collection.AbstractIterator[PackedRowBatch] {
       override def hasNext: Boolean = it.hasNext
       override def next(): PackedRowBatch = {
@@ -360,7 +212,6 @@ private[sql] object PackedRowBatch {
         var full = false
         while (it.hasNext && !full) {
           val r = it.next()
-          observe(r)
           r match {
             case u: UnsafeRow =>
               val sz = u.getSizeInBytes

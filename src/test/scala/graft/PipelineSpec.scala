@@ -753,17 +753,17 @@ class SuperstepResumeSpec extends SparkTest {
 
     // run 1: stop after 3 iterations (simulated failure)
     val h1 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    h1.run(state0, maxIter = 3)(step)(changed)
+    h1.run(state0, maxIter = 3)(step)(c => changed(c.df))
 
     // run 2: resume and finish
     val h2 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
     val Some((resumed, startIter)) = h2.resume()
     assert(startIter == 3)
-    val (fin, _) = h2.run(resumed, maxIter = 100, startIter = startIter)(step)(changed)
+    val (fin, _) = h2.run(resumed, maxIter = 100, startIter = startIter)(step)(c => changed(c.df))
 
     // oracle: full uninterrupted run
     val h3 = new graft.plans.Superstep(spark, "toy2", None)
-    val (finFull, _) = h3.run(state0, maxIter = 100)(step)(changed)
+    val (finFull, _) = h3.run(state0, maxIter = 100)(step)(c => changed(c.df))
     assert(fin.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       finFull.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
@@ -778,7 +778,7 @@ class SuperstepResumeSpec extends SparkTest {
       st.filter(col("value") > 0).count()
 
     val h = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    h.run(state0, maxIter = 2)(step)(changed)
+    h.run(state0, maxIter = 2)(step)(c => changed(c.df))
     val manifest = java.nio.file.Paths.get(dir, "toy.manifest.jsonl")
 
     // A snapshot-less metrics line (snapshotEvery not hit) and blank lines

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Physical-plan quality gates (SURVEY.md §4): these assert the *shape* of
@@ -78,7 +79,7 @@ class PlanSpec extends SparkTest {
   test("stats-free checkpoint keeps superstep stats bounded") {
     val s = spark; import s.implicits._
     val arena = new graft.plans.CheckpointArena
-    var st = arena.fresh((0L until 100L).map(i => (i, i)).toDF("id", "comp"))
+    var st = arena.checkpoint((0L until 100L).map(i => (i, i)).toDF("id", "comp")).df
     val other = st.select(col("id").as("lid"), col("comp").as("lcomp"))
     // 15 self-join supersteps: with Dataset.localCheckpoint this squares
     // sizeInBytes each step (bitLength doubles); with the shim it stays flat
@@ -87,7 +88,7 @@ class PlanSpec extends SparkTest {
       val next = st.join(labels, st("comp") === labels("lid"), "left")
         .select(st("id"), least(st("comp"), coalesce(col("lcomp"), st("comp"))).as("comp"))
       val prev = st
-      st = arena.fresh(next)
+      st = arena.checkpoint(next).df
       arena.release(prev)
     }
     val bits = st.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
@@ -100,7 +101,7 @@ class PlanSpec extends SparkTest {
     val arena = new graft.plans.CheckpointArena
     val base = (0L until 1000L).map(i => (i, i * 2)).toDF("id", "v")
       .repartition(col("id"))
-    val chk = arena.fresh(base)
+    val chk = arena.checkpoint(base).df
     // 1) the checkpoint leaf must CARRY a usable hash partitioning
     val lr = chk.queryExecution.optimizedPlan
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
@@ -117,7 +118,7 @@ class PlanSpec extends SparkTest {
       // re-checkpointing `base` would reuse the coalesced first execution
       val base2 = (0L until 1000L).map(i => (i, i * 2)).toDF("id", "v")
         .repartition(col("id"))
-      val chk2 = arena.fresh(base2)
+      val chk2 = arena.checkpoint(base2).df
       val small = (0L until 500L).map(i => (i, "x")).toDF("id", "tag")
         .repartition(col("id"))
       // force a shuffle-requiring join (tiny tables would broadcast)
@@ -128,6 +129,58 @@ class PlanSpec extends SparkTest {
       val exchanges = "Exchange hashpartitioning".r.findAllIn(finalSection).size
       assert(exchanges <= 1, s"$exchanges exchanges in final plan:\n${finalSection.take(3000)}")
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    arena.closeExcept()
+  }
+
+  test("checkpoint taps equal independent aggregates and ride its one job") {
+    val df = spark.range(0L, 5000L, 1L, 6)
+      .select(
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id") % 3 === 0).as("flag"),
+        (col("id") % 16).cast("int").as("st"),
+        (col("id") % 11).as("oc"),
+        (col("id") * 7 % 13).as("ic"),
+        col("id").as("u"),
+        (col("id") * 31 % 1000).as("v"))
+    def taps = Seq(
+      count_if(col("flag")),
+      count_if(col("st").bitwiseAND(lit(12)) =!= lit(0)),
+      sum("oc"),
+      max("ic"),
+      bit_xor(xxhash64(col("u"), col("v"))))
+    val arena = new graft.plans.CheckpointArena
+    val c = arena.checkpoint(df, taps: _*)
+    val oracle = df.agg(taps.head, taps.tail: _*).head()
+    assert(c.rows == 5000L)
+    assert(c.taps == taps.indices.map(oracle.getLong), s"taps ${c.taps} vs agg $oracle")
+    assert(c.taps.forall(_ != 0L))
+    assert(c.df.count() == 5000L)
+
+    // an empty frame reads 0 for every tap, with empty partitions or none
+    val empty = arena.checkpoint(df.filter(lit(false)), taps: _*)
+    assert(empty.rows == 0L && empty.taps == Vector.fill(taps.size)(0L))
+    val noParts = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
+    assert(noParts.rdd.getNumPartitions == 0)
+    val none = arena.checkpoint(noParts, taps: _*)
+    assert(none.rows == 0L && none.taps == Vector.fill(taps.size)(0L))
+
+    // the taps ride the materialization: one Spark job with 0 taps or 4
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def jobsOf(f: => Unit): Int = {
+        org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
+        jobs.set(0)
+        f
+        org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
+        jobs.get
+      }
+      assert(jobsOf(arena.checkpoint(df)) == 1)
+      assert(jobsOf(arena.checkpoint(df, taps.take(4): _*)) == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
     arena.closeExcept()
   }
 
